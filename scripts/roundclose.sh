@@ -6,6 +6,8 @@
 #      via graft.Verify -> scripts/check.py (DuckDB oracle, hash-exact)
 #   3. sf0.1 bench (graft.Bench, stdout line + BENCH_DETAIL_sf0.1.json)
 #   4. ScaleBench headlines vs BASELINE budgets
+# plus the benchmark's own unit tests (perfbench/tests: workload
+# generators, percentile and check rules; no Spark) before step 1.
 # Usage: scripts/roundclose.sh [--skip-test] [--skip-bench]
 # Logs land under /tmp/roundclose/; the summary is also written to
 # /tmp/roundclose/SUMMARY.txt. Exit 0 iff every executed step passed.
@@ -32,6 +34,13 @@ step() { # step <name> <exitcode>
 # number to rank by, not an intuition. Usage: t_start; ... ; t_end -> $DT
 t_start() { T0=$(date +%s); }
 t_end() { DT=$(( $(date +%s) - T0 )); }
+
+echo "== benchmark unit tests =="
+t_start
+python3 -m unittest discover -s perfbench/tests > "$LOGS/perfbench_tests.log" 2>&1
+urc=$?
+t_end
+step "perfbench unit tests [${DT}s]" "$urc"
 
 if [ "$SKIP_TEST" -eq 0 ]; then
   echo "== [1/4] sbt test =="

@@ -22,22 +22,9 @@ object LocalSession {
 
   /** `local[cpus]` session with the engine extensions and the confs the
     * gate queries rely on; log level WARN (keeps INFO noise out of the
-    * output whose tail a harness may capture). `extraConfs` land on the
-    * BUILDER (not runtime `conf.set`), so they also reach every
-    * `newSession()` clone — the replay scaffold's sessions — which is how
-    * ReplayProbe's listener conf follows the streaming gate queries. */
-  def create(cpus: String,
-      extraConfs: Map[String, String] = Map.empty): SparkSession = {
-    // builder-level extras can only be applied while CREATING the session
-    // — getOrCreate() against a pre-existing session drops static confs
-    // with nothing but a log warning, and the clone-inheritance guarantee
-    // above silently evaporates. Fail loudly instead (r20 review).
-    require(extraConfs.isEmpty ||
-      (SparkSession.getActiveSession.isEmpty &&
-        SparkSession.getDefaultSession.isEmpty),
-      "LocalSession.create(extraConfs): a SparkSession already exists in " +
-        "this JVM — builder-level extras cannot be applied retroactively")
-    val builder = SparkSession.builder()
+    * output whose tail a harness may capture). */
+  def create(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -57,8 +44,6 @@ object LocalSession {
       // hook keeps each JVM from stranding its copy in tmp.
       .config("spark.sql.warehouse.dir", warehouseDir("graft_warehouse"))
       .config("spark.ui.enabled", "false")
-    val spark = extraConfs
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // the deliberate superseded-block release in the graph loops

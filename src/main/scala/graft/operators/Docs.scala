@@ -264,13 +264,12 @@ object Docs {
     * cache/stage dropped before returning, so repeated dedup sweeps in a
     * long-lived session accumulate neither storage blocks nor tmp files. */
   private[graft] def neardupPairs(spark: SparkSession, dir: String,
-      numHashes: Int = NumHashes, bandRows: Int = GateBandRows,
-      family: String = "md5"): DataFrame = {
+      numHashes: Int = NumHashes, bandRows: Int = GateBandRows): DataFrame = {
     val src = s"$dir/documents.parquet"
     val threshold = spark.conf.getOption("spark.graft.shingleStageBytes")
       .map(_.toLong).getOrElse(ShingleStageBytesDefault)
     def pairs(arrs: DataFrame): DataFrame =
-      minhashVerify(minhashCandidates(arrs, numHashes, bandRows, family),
+      minhashVerify(minhashCandidates(arrs, numHashes, bandRows),
         explodeShingles(arrs))
     if (inputBytes(spark, src) <= threshold) {
       val arrs = shingleArraysOf(table(spark, dir, "documents")).cache()
@@ -330,62 +329,28 @@ object Docs {
     * stays ≥0.99 (1−(1−J⁴)⁶) while Zipf false-candidate volume drops by
     * the extra J² per band. */
   private[graft] def minhashCandidates(arrs: DataFrame,
-      numHashes: Int = NumHashes, bandRows: Int = GateBandRows,
-      family: String = "md5"): DataFrame =
-    minhashCandidatePlan(arrs, numHashes, bandRows, family)
-      // materialized: the pair set (bounded by the banding) now feeds the
-      // intersection join AND the doc-id prune below — re-evaluating the
-      // signature/banding subtree per consumer measurably dominates
-      .localCheckpoint(true)
-
-  /** [[minhashCandidates]]' LAZY plan (split out r22 so the plan-dump
-    * evidence tool can render the banding stage per family — the eager
-    * checkpoint above otherwise hides it behind a LogicalRDD scan). */
-  private[graft] def minhashCandidatePlan(arrs: DataFrame,
-      numHashes: Int, bandRows: Int, family: String): DataFrame = {
-    require(numHashes % bandRows == 0 && (family != "md5" || numHashes % 4 == 0),
-      s"minhashCandidates: $numHashes hashes must tile $bandRows-row bands" +
-        (if (family == "md5") " and md5 quarters" else ""))
-    require(family == "md5" || family == "xx64",
-      s"minhashCandidates: unknown hash family '$family' (md5 | xx64)")
-    // map-only: all numHashes minima in one compiled pass per document.
-    // `family` is a CORPUS-SCALE dial like numHashes/bandRows (r22,
-    // VERDICT r21 #1): the gate (and its DuckDB oracle) fix the md5
-    // family — 4 hash functions per md5 call, each digest's 32 hex chars
-    // split into 4 independent 8-char chunks, exactly the aggregate form
-    // the kernel replaced — while 'xx64' swaps in one XXH64 round per
-    // (shingle, hash) with long-typed signatures and band keys. Measured
-    // at 10M docs (OPTIMIZATION_r22.md §1b): wall-equivalent there (the
-    // quarter trick already amortized md5 well), but 16% fewer Zipf
-    // false candidates at identical 0.990 recall, 8-byte band keys
-    // through the candidate exchange instead of 32-char hex, and a
-    // per-hash arithmetic term that only compounds at 10⁹⁺ docs. Banding
-    // semantics are family-agnostic (any uniform hash is a MinHash
-    // permutation); NeardupScaleBench re-measures recall per family.
-    val sig = family match {
-      case "md5" => arrs.select(col("doc_id"),
-        call_function("minhash_signature",
-          col("ss"), lit(numHashes)).as("mh"))
-      case _ => arrs.select(col("doc_id"),
-        call_function("minhash_signature_xx64",
-          col("ss"), lit(numHashes)).as("mh"))
-    }
+      numHashes: Int = NumHashes, bandRows: Int = GateBandRows): DataFrame = {
+    require(numHashes % 4 == 0 && numHashes % bandRows == 0,
+      s"minhashCandidates: $numHashes hashes must tile md5 quarters and " +
+        s"$bandRows-row bands")
+    // map-only: all numHashes md5-quarter minima in one compiled pass per
+    // document (4 hash functions per md5 call — each md5's 32 hex chars
+    // split into 4 independent 8-char chunks; md5 is the dominant
+    // per-shingle cost at scale, and the kernel pays exactly the same
+    // digest count as the aggregate form it replaced, minus its exchange)
+    val sig = arrs.select(col("doc_id"),
+      call_function("minhash_signature",
+        col("ss"), lit(numHashes)).as("mh"))
     val numBands = numHashes / bandRows
-    // band value: md5 re-digests the band's hex signature slice (the gate
-    // relation); xx64 folds the band's longs through the codegen'd
-    // built-in xxhash64 (band index as the leading argument keeps bands
-    // independent) — no digest, and an 8-byte band key instead of a
-    // 32-char hex string through the candidate exchange
-    def bandVal(b: Int): String = {
-      val cols = (0 until bandRows).map(r => s"mh[${bandRows * b + r}]")
-      family match {
-        case "md5" => s"md5(concat('$b|', ${cols.mkString(", ")}))"
-        case _ => s"xxhash64($b, ${cols.mkString(", ")})"
-      }
-    }
+    // band value: md5 re-digests the band's hex signature slice. A NULL
+    // signature (empty / all-NULL shingle set) makes every band_val NULL
+    // through concat, and the equi-join below drops NULL keys — such docs
+    // never become candidates (pinned in PlansSpec).
     val bands = sig.select(col("doc_id"),
       expr(s"stack($numBands, ${(0 until numBands).map(b =>
-        s"'$b', ${bandVal(b)}").mkString(", ")})" +
+        s"'$b', md5(concat('$b|', ${(0 until bandRows)
+          .map(r => s"mh[${bandRows * b + r}]").mkString(", ")}))")
+        .mkString(", ")})" +
         " AS (band_idx, band_val)"))
     bands.as("x").join(bands.as("y"),
         col("x.band_idx") === col("y.band_idx") &&
@@ -393,6 +358,10 @@ object Docs {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
+      // materialized: the pair set (bounded by the banding) now feeds the
+      // intersection join AND the doc-id prune below — re-evaluating the
+      // signature/banding subtree per consumer measurably dominates
+      .localCheckpoint(true)
   }
 
   /** q19's verify stage: exact shingle Jaccard over the candidate pairs
@@ -590,23 +559,12 @@ object Docs {
     * when the kernel first landed without the filter; `split` never
     * returns an empty or null-element array for non-NULL text ("" →
     * [""]), so `text IS NOT NULL` is the exact row-domain condition. */
-  def simhashBits(spark: SparkSession, dir: String, bits: Int,
-      family: String = "md5"): DataFrame = {
-    // `family` is the corpus-scale dial simBits/numBands already are
-    // (r22, VERDICT r21 #1): the gate (q20/q24) and its oracle fix the
-    // md5 family; 'xx64' draws all 64 dims of a group from ONE XXH64
-    // round per token for corpora where the fingerprint pass is walled
-    // on MessageDigest arithmetic. Same row domain, same bit-string
-    // emission — banding/hamming compose unchanged.
-    require(family == "md5" || family == "xx64",
-      s"simhashBits: unknown hash family '$family' (md5 | xx64)")
-    val fn = if (family == "md5") "simhash_bits" else "simhash_bits_xx64"
+  def simhashBits(spark: SparkSession, dir: String, bits: Int): DataFrame =
     table(spark, dir, "documents")
       .filter(col("text").isNotNull)
       .select(col("doc_id"),
-        call_function(fn,
+        call_function("simhash_bits",
           split(col("text"), " "), lit(bits)).as("simhash"))
-  }
 
   def q20Simhash(spark: SparkSession, dir: String): DataFrame =
     simhashBits(spark, dir, SimBits).orderBy("doc_id")
@@ -644,7 +602,7 @@ object Docs {
     * population shrinks ~2× per added band bit; asserted in PipelineSpec). */
   def simhashNeardupPairs(spark: SparkSession, dir: String,
       simBits: Int = SimBits, numBands: Int = 2,
-      maxHamming: Long = 1L, family: String = "md5"): DataFrame = {
+      maxHamming: Long = 1L): DataFrame = {
     require(simBits % numBands == 0, s"$numBands bands must tile $simBits bits")
     require(maxHamming < numBands, "banding is lossless only for hamming < numBands")
     val w = simBits / numBands
@@ -654,7 +612,7 @@ object Docs {
     // its expensive part (the per-doc simhash_bits kernel) sits below the
     // band-bucket shuffle, which ReuseExchange dedupes — measured, an
     // explicit materialization barrier here is slightly SLOWER, not faster
-    val bands = simhashBits(spark, dir, simBits, family).select(
+    val bands = simhashBits(spark, dir, simBits).select(
       col("doc_id"), col("simhash"),
       expr(s"stack($numBands, $stackArgs) AS (band_idx, band_val)"))
     val cand = bands.as("x").join(bands.as("y"),

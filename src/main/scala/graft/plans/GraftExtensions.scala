@@ -63,25 +63,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[SimhashBits].getName, "simhash_bits"),
       (children: Seq[Expression]) =>
         SimhashBits(children(0), children(1))))
-    // r22: the cheap-hash (xxhash64-family) twins of the two near-dup
-    // kernels — the corpus-scale `family` dial of Docs.minhashCandidates /
-    // simhashNeardupPairs (VERDICT r21 #1). The GATE queries keep the md5
-    // family (and its DuckDB oracles) untouched; the measured wins are
-    // count-backed (fewer false candidates at equal recall, long band
-    // keys) plus arithmetic terms that compound at 10⁹⁺ docs — see
-    // OPTIMIZATION_r22.md §1b for the same-session family comparison.
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_signature_xx64"),
-      new ExpressionInfo(classOf[MinhashSignatureXx64].getName,
-        "minhash_signature_xx64"),
-      (children: Seq[Expression]) =>
-        MinhashSignatureXx64(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash_bits_xx64"),
-      new ExpressionInfo(classOf[SimhashBitsXx64].getName,
-        "simhash_bits_xx64"),
-      (children: Seq[Expression]) =>
-        SimhashBitsXx64(children(0), children(1))))
     ext.injectFunction((
       new FunctionIdentifier("window_mins"),
       new ExpressionInfo(classOf[WindowMins].getName, "window_mins"),

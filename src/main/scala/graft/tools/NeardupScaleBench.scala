@@ -119,11 +119,6 @@ object NeardupScaleBench {
     // Zipf false candidates by J² more per band
     val numHashes = if (args.length > 8) args(8).toInt else 24
     val bandRows = if (args.length > 9) args(9).toInt else 4
-    // the r22 hash-family dial (VERDICT r21 #1): 'md5' is the gate family
-    // (and the r20/r21 rehearsals' configuration — comparable numbers);
-    // 'xx64' is the corpus-scale family whose banding must hit the same
-    // planted recall at a fraction of the digest arithmetic
-    val family = if (args.length > 10) args(10) else "md5"
     val spark = LocalSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     def timed[A](f: => A): (A, Double) = {
@@ -152,7 +147,7 @@ object NeardupScaleBench {
     val arrs = spark.read.parquet(shPath)
     val sh = arrs.select(col("doc_id"), explode(col("ss")).as("s"))
     val (cand, tCand) =
-      timed(Docs.minhashCandidates(arrs, numHashes, bandRows, family))
+      timed(Docs.minhashCandidates(arrs, numHashes, bandRows))
     val nCand = cand.count()
     val (pairs, tVerify) = timed(Docs.minhashVerify(cand, sh))
     val nPairs = pairs.count()
@@ -178,7 +173,7 @@ object NeardupScaleBench {
     // --- leg C: the q24 SimHash comparison at the documented scale config
     val ((nSim, nSimPlanted), tSim) = timed {
       val sim = Docs.simhashNeardupPairs(spark, fullDir,
-        simBits = 64, numBands = 2, maxHamming = 1L, family = family)
+        simBits = 64, numBands = 2, maxHamming = 1L)
         .localCheckpoint(true)
       (sim.count(),
         sim.filter(col("doc_a") % dupMod === 0 &&
@@ -191,7 +186,7 @@ object NeardupScaleBench {
     // shape (no corpus-wide .cache(); the cached shape OOM'd a 48g driver
     // here at 10M docs) and reproduce the staged legs' pair set exactly.
     val (prodDigest, tProd) = timed(digest(
-      Docs.neardupPairs(spark, fullDir, numHashes, bandRows, family)))
+      Docs.neardupPairs(spark, fullDir, numHashes, bandRows)))
     val stagedPairsDigest = digest(pairs)
     val prodOk = prodDigest == stagedPairsDigest
 
@@ -213,7 +208,7 @@ object NeardupScaleBench {
     val (nVecCand, tVecCand) =
       timed(Vectors.candidatePairs(refined).count())
 
-    println(s"""{"metric":"neardup_scale","docs":$docs,"family":"$family",""" +
+    println(s"""{"metric":"neardup_scale","docs":$docs,""" +
       s""""prod_path_sec":${f(tProd)},"prod_digest_ok":$prodOk,""" +
       s""""num_hashes":$numHashes,"band_rows":$bandRows,""" +
       s""""words_per_doc":$wordsPerDoc,"vocab":$vocab,"dup_mod":$dupMod,""" +
