@@ -15,7 +15,7 @@ set -u
 cd "$(dirname "$0")/.."
 LOGS=/tmp/roundclose
 mkdir -p "$LOGS"
-CPUS="${SPARK_GRAFT_CPUS:-32}"
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 SKIP_TEST=0; SKIP_BENCH=0
 for a in "$@"; do
   case "$a" in

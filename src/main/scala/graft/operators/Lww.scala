@@ -105,20 +105,22 @@ object Lww {
   /** O2 single-row path, the faithful analog of the reference's point upsert
     * (`MongoDBConnector.py:46-102`, which probes ONE `(s,p)` key and returns
     * `{new_row, old_row}` — it never touches the rest of the store): an
-    * equality-pushed point probe of the base table plus the in-memory
-    * comparator. Over a [[graft.TripleStore.writeSharded]] layout the probe
-    * prunes to one range shard and skips row groups by min/max, so latency
-    * is O(one shard's matching row groups) regardless of store size —
-    * the Spark twin of the reference's O(1) claim (report.pdf §7.1). */
+    * equality-pushed point probe of the base table beside the update row.
+    * Over a [[graft.TripleStore.writeSharded]] layout the probe prunes to one
+    * range shard and skips row groups by min/max, so latency is O(one
+    * shard's matching row groups) regardless of store size — the Spark twin
+    * of the reference's O(1) claim (report.pdf §7.1). `new_row` needs no
+    * [[upsert]] aggregate: its comparator leads with `prio`, so one update
+    * row wins its group against any old rows; the aggregate would only add
+    * a shuffle, a job and a second scan of `base` (LwwSpec pins both). */
   def upsertPoint(base: DataFrame, subject: String, predicate: String,
       newObject: String, tsMs: Long): DataFrame = {
     val spark = base.sparkSession
     import spark.implicits._
-    val update = Seq((subject, predicate, newObject, tsMs))
-      .toDF("subject", "predicate", "object", "ts_ms")
     val old = base.filter(col("subject") === subject &&
       col("predicate") === predicate)
-    upsert(old, update).withColumn("row_kind", lit("new_row"))
+    Seq((subject, predicate, newObject, tsMs, "new_row"))
+      .toDF("subject", "predicate", "object", "ts_ms", "row_kind")
       .unionByName(old.withColumn("row_kind", lit("old_row")))
   }
 

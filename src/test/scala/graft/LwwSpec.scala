@@ -41,9 +41,9 @@ class LwwSpec extends AnyFunSuite {
   private def winners(d: DataFrame): Set[Row4] =
     d.as[Row4].collect().toSet
 
-  private def checkProp(p: Prop): Unit = {
+  private def checkProp(p: Prop, n: Int = 12): Unit = {
     val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(12), p)
+      SCTest.Parameters.default.withMinSuccessfulTests(n), p)
     assert(res.passed, res.status.toString)
   }
 
@@ -198,6 +198,62 @@ class LwwSpec extends AnyFunSuite {
     val out = Lww.upsertPoint(store, "<s>", "<p>", "NEW", 50L)
       .as[(String, String, String, Long, String)].collect().toSet
     assert(out == Set(("<s>", "<p>", "NEW", 50L, "new_row")))
+  }
+
+  // ---- upsertPoint against the aggregate formulation ------------------
+  // upsertPoint returns the update row as new_row without aggregating; the
+  // form it replaced ran upsert(old, update) over the probed key. Bases
+  // hold 0–3 rows for the probed key (absent key, several rows), ts_ms
+  // older, equal and newer than the update's, NULL and astral objects.
+
+  private def upsertPointViaAggregate(base: DataFrame, s: String, p: String,
+      o: String, ts: Long): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val old = base.filter(col("subject") === s && col("predicate") === p)
+    Lww.upsert(old, df(List((s, p, o, ts))))
+      .withColumn("row_kind", lit("new_row"))
+      .unionByName(old.withColumn("row_kind", lit("old_row")))
+  }
+
+  private val genPointCase: Gen[(List[Row4], String)] = {
+    val obj = Gen.oneOf[String](null, "", "a", "obj", "😀", "ﬀ")
+    val ts = Gen.oneOf(9L, 10L, 11L) // the update below is at 10
+    val probed = for { o <- obj; t <- ts } yield ("<s>", "<p>", o, t)
+    val other = for {
+      k <- Gen.oneOf(("<s>", "<q>"), ("<t>", "<p>"), ("<t>", "<q>"))
+      o <- obj; t <- ts
+    } yield (k._1, k._2, o, t)
+    for {
+      n    <- Gen.choose(0, 3)
+      hits <- Gen.listOfN(n, probed)
+      rest <- Gen.listOfN(4, other)
+      o    <- obj
+    } yield (hits ++ rest, o)
+  }
+
+  test("upsertPoint == upsert(old, update) + old rows on generated bases " +
+    "(absent key, several rows, older/equal/newer ts, NULL and astral " +
+    "objects)") {
+    def rows(d: DataFrame): Seq[String] = d.collect().map(_.toString).sorted
+    checkProp(Prop.forAll(genPointCase) { case (base, o) =>
+      val got = Lww.upsertPoint(df(base), "<s>", "<p>", o, 10L)
+      val want = upsertPointViaAggregate(df(base), "<s>", "<p>", o, 10L)
+      got.dtypes.toSeq == want.dtypes.toSeq && rows(got) == rows(want)
+    }, n = 40)
+  }
+
+  test("upsertPoint plans one scan of base and no Exchange") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_point")
+    try {
+      val path = dir.resolve("store").toString
+      df(List(("<s>", "<p>", "OLD", 100L), ("<t>", "<p>", "X", 5L)))
+        .write.parquet(path)
+      val plan = Lww.upsertPoint(spark.read.parquet(path), "<s>", "<p>",
+        "NEW", 50L).queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"upsertPoint shuffles:\n$plan")
+      assert("FileScan".r.findAllIn(plan).length == 1,
+        s"expected exactly one scan of base:\n$plan")
+    } finally graft.streaming.StreamingLww.deleteRecursively(dir.toFile)
   }
 
   test("changelogUnion: newer changelog wins key collisions " +

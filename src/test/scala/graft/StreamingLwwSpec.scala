@@ -185,6 +185,85 @@ class StreamingLwwSpec extends AnyFunSuite {
     assert(store.contains(Triple("<c>", "<q>", "y", 80L))) // LWW within shard
   }
 
+  /** Jobs run under `tag` while `body` runs. The tag is set on this thread
+    * before `body` starts its query, so the stream thread inherits it. A
+    * sentinel job under a second tag closes the count: the listener bus
+    * delivers in order, so once the sentinel's start arrives every job
+    * `body` ran has been delivered. */
+  private def jobsTagged(tag: String)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val tags = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .fold(Set.empty[String])(_.split(",").toSet)
+        if (tags(tag)) jobs.incrementAndGet()
+        if (tags(s"$tag.sentinel")) sentinel.countDown()
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.addJobTag(tag)
+      try body finally sc.removeJobTag(tag)
+      sc.addJobTag(s"$tag.sentinel")
+      try spark.range(1).count() finally sc.removeJobTag(s"$tag.sentinel")
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never delivered the sentinel job")
+      jobs.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("partitioned sink reads only the shards a batch touches: junk in an " +
+    "untouched shard is never opened, and a one-shard commit is 3 jobs") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_part_touched")
+    val storePath = dir.resolve("store").toString
+    val ckpt = dir.resolve("ckpt").toString
+    val boundaries = Seq("<b>", "<c>")
+    val b1 = Seq(
+      Triple("<a>", "<p>", "v1", 100L),   // shard 0
+      Triple("<c>", "<q>", "x", 50L))     // shard 2
+    val b2 = Seq(
+      Triple("<c>", "<q>", "y", 80L),     // shard 2 only
+      Triple("<c>", "<r>", "z", 60L))
+    try {
+      val source = MemoryStream[Triple]
+      source.addData(b1: _*)
+      StreamingLww.mergeIntoStorePartitioned(
+        source.toDS(), storePath, ckpt, boundaries).awaitTermination()
+      // not parquet, and named as the metadata file a schema-inferring read
+      // of the store opens first: listing or inferring over shard 0 fails
+      val shard0 = java.nio.file.Paths.get(storePath, "shard=0")
+      java.nio.file.Files.writeString(
+        shard0.resolve("_common_metadata"), "not parquet")
+      def files(): Map[String, (Long, Long)] = shard0.toFile.listFiles()
+        .map(f => f.getName -> (f.length(), f.lastModified())).toMap
+      val before = files()
+
+      source.addData(b2: _*)
+      val jobs = jobsTagged("graft_part_touched") {
+        StreamingLww.mergeIntoStorePartitioned(
+          source.toDS(), storePath, ckpt, boundaries).awaitTermination()
+      }
+      // touched-shard collect, then the merge's shuffle stage and write
+      assert(jobs == 3, s"a one-shard commit ran $jobs jobs, expected 3")
+      assert(files() == before, s"untouched shard 0 changed: ${files()}")
+
+      java.nio.file.Files.delete(shard0.resolve("_common_metadata"))
+      val store = spark.read.parquet(storePath)
+        .select("subject", "predicate", "object", "ts_ms")
+        .as[Triple].collect().toSet
+      val batch = Lww.upsert(
+          Seq.empty[Triple].toDF("subject", "predicate", "object", "ts_ms"),
+          (b1 ++ b2).toDF("subject", "predicate", "object", "ts_ms"))
+        .as[Triple].collect().toSet
+      assert(store == batch)
+    } finally StreamingLww.deleteRecursively(dir.toFile)
+  }
+
   test("partitioned sink crash recovery: a shard stranded at '.old' " +
     "mid-swap is restored before the next batch merges") {
     implicit val sqlCtx = spark.sqlContext
